@@ -3,60 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_SHUFFLE: shuffle partition count, default = cores (the
-    // driver contract). DEPLOY.md's sizing rule says grow this with the
-    // data; the env knob lets a scale experiment test exactly that claim
-    // on a fixed corpus without editing the tool.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    // Scan-side task sizing knob (r15). Measured A/B at sf1 (q21/q33/
-    // q35/q45 scoped, idle box): 8m read 12.2 s vs 9.1 s at the 128m
-    // default — the heavy queries are shuffle-agg bound, not scan
-    // bound, and 3 MB scan tasks just add task overhead. Default stays
-    // Spark's 128m; the env knob exists so scale experiments can test
-    // scan-width claims without editing the tool.
-    val maxPart = sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION", "128m")
-    // Broadcast threshold knob (r15). Measured A/B at sf10: raising it
-    // to 64m looked like parity with DuckDB's always-build-small-side
-    // hash joins, but BroadcastExchange collects AND builds the hash
-    // relation single-threaded on the driver — a 2M-row build costs
-    // seconds and is re-paid every pass, so the heavy set read 2-7×
-    // WORSE (q26 6.9 s → 16.5 s, q43 1.2 s → 8.8 s). A 32-thread
-    // shuffle join beats a serial broadcast build at these sizes;
-    // default stays Spark's 10 MB, knob kept for experiments.
-    val bcast = sys.env.getOrElse("SPARK_GRAFT_BCAST", "10485760")
-    // Join strategy (r15): above the broadcast threshold the engine
-    // prefers SHUFFLED HASH over sort-merge. Once both sides are
-    // exchanged on the key anyway, SMJ additionally SORTS the fact side
-    // — stage-profiled at sf10, q05's post-shuffle stage burned 100
-    // executor-CPU-s of which ~35 s was sorting 60M rows that the hash
-    // build never needs (8.1 s → 5.5 s wall). This matches the
-    // baseline engine's plan (DuckDB hash-joins everything) and the
-    // 100 TB story: build side = the per-partition slice of the SMALLER
-    // input (bounded by shuffle sizing, AQE splits skew), and Spark's
-    // SHJ spills since 3.x, so the plan degrades to disk instead of
-    // OOM on a hot key. SPARK_GRAFT_PREFER_SMJ=1 restores the Spark
-    // default for A/B runs.
-    val preferSmj = sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "0") == "1"
-    // SPARK_GRAFT_CONF (r15): generic "k=v;k=v" conf overlay for scoped
-    // A/B experiments — applied LAST so an experiment can override any
-    // default; never set by the driver, so artifacts of record are
-    // unaffected.
-    val spark = ToolConf(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.files.maxPartitionBytes", maxPart)
-      .config("spark.sql.autoBroadcastJoinThreshold", bcast)
-      .config("spark.sql.join.preferSortMergeJoin", preferSmj.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see Verify.scala: Generate-inferred filters re-run tokenization
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // Machine-state capture (r6 verdict: a run-wide ~1.45x inflation was
     // unattributable because the bench recorded nothing about the box).
     // Load average is sampled at start AND end so a contended run is
@@ -101,19 +48,17 @@ object Bench {
         s""""gate_waited_sec":$gateWaitedSec,""" +
         s""""warm_pass":$warmPass,""" +
         // r16 (r15 verdict item 1): "cpus" is the PHYSICAL processor
-        // count (getAvailableProcessors — kept for artifact continuity),
-        // which reads 32 on this box even under SPARK_GRAFT_CPUS=8 and
-        // made the 8-core scaling run unprovable from its artifact
-        // (suspect_cpus_ignored). cpus_requested is the env value the
-        // master/shuffle settings actually honor, and master is the
-        // literal string the session was built with.
+        // count (kept for artifact continuity); cpus_requested is the
+        // count the session's master and shuffle partitions use, and
+        // master is the literal string the session was built with, so
+        // a scaling run is provable from its artifact.
         s""""cpus":${osBean.getAvailableProcessors},""" +
-        s""""cpus_requested":$cpus,"master":${jstr(s"local[$cpus]")},""" +
-        // r15 ADVICE: a leftover SPARK_GRAFT_CONF / SPARK_GRAFT_JVM_OPTS
-        // overlay silently alters a run — serialize the raw values
-        // (empty when unset) so every artifact self-describes its config.
+        s""""cpus_requested":${Session.cpus},""" +
+        s""""master":${jstr(spark.sparkContext.master)},""" +
+        // r15 ADVICE: a leftover SPARK_GRAFT_CONF overlay silently alters
+        // a run — serialize the raw value (empty when unset) so every
+        // artifact self-describes its config.
         s""""conf_overlay":${jstr(sys.env.getOrElse("SPARK_GRAFT_CONF", ""))},""" +
-        s""""jvm_opts":${jstr(sys.env.getOrElse("SPARK_GRAFT_JVM_OPTS", ""))},""" +
         s""""heap_max_mb":${rt.maxMemory / 1048576},""" +
         s""""heap_used_mb":${(rt.totalMemory - rt.freeMemory) / 1048576}}"""
     }
@@ -137,10 +82,16 @@ object Bench {
       val dead = ps.filterNot(p => SparkEntry.queries.keys.exists(_.startsWith(p)))
       require(dead.isEmpty, s"SPARK_GRAFT_QUERIES matches nothing: $dead")
     }
-    queries.foreach { case (_, fn) =>
-      try fn(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => () }
-    }
+    // a failed warm-up is reported, not swallowed; the query is then
+    // timed (and recorded as failed) like any other
+    def warm(name: String,
+             fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+             dir: String): Unit =
+      try fn(spark, dir).count()
+      catch { case t: Throwable =>
+        System.err.println(s"BENCH WARM FAIL $name: ${t.getClass.getName}: ${t.getMessage}")
+      }
+    queries.foreach { case (name, fn) => warm(name, fn, "/root/testdata/sf0.001") }
     // Steady-state warm pass at the BENCH SF (r12 verdict items 1/5):
     // the sf0.001 loop warms JIT/codegen but not the bench-scale
     // artifacts the operators are built around (d19's occ cache, the
@@ -152,10 +103,7 @@ object Bench {
     // pass is declared in the artifact (warm_pass) rather than passed
     // off as part of the measurement. SPARK_GRAFT_WARM_PASS=0 disables
     // (cold-start experiments).
-    if (warmPass) queries.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count()
-      catch { case _: Throwable => () }
-    }
+    if (warmPass) queries.foreach { case (name, fn) => warm(name, fn, sfDir) }
     // A failed query is recorded as None (absent from the ledger), NOT as
     // its elapsed-until-crash wall time: a fast failure would otherwise be
     // published as a flattering pass and pollute min/total/ratio math.

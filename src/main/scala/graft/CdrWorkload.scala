@@ -90,19 +90,12 @@ object CdrCorpus {
   * [[CdrCorpus]] makes free.
   *
   * Usage: runMain graft.CdrWorkload <corpusDir> [workDir]
-  * (env SPARK_GRAFT_CPUS honored; workDir holds the SeqFile twin). */
+  * (session from [[Session]]; workDir holds the SeqFile twin). */
 object CdrWorkload {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "target/cdr10m"
     val work = if (args.length > 1) args(1) else dir + "-work"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     try {
       val json = run(spark, dir, work)
       val w = new java.io.PrintWriter("cdr_bench.json")

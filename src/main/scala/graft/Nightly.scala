@@ -134,18 +134,7 @@ object Nightly {
       if (args.length > 3) args(3).toLong else operators.Dedup.NoDfCap
     val maxGenerations = if (args.length > 4) args(4).toInt else 64
     val explicitId = if (args.length > 5) Some(args(5).toLong) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     try {
       val (id, n, selfPairs, folded, horizon) = runCycle(
         spark, args(0), args(1), args(2), batchMaxDf, maxGenerations, explicitId)

@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   * doesn't use.
   *
   * Usage: runMain graft.RecallAudit [sfDir] [outFile] [prevFile]
-  * (env SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS honored, Bench's rule).
+  * (sfDir defaults to SPARK_GRAFT_SF_DIR, Bench's rule; session from
+  * [[Session]]).
   * When a previous round's file is given — or a RECALL_r{N}.json is
   * found in the cwd — the emitted JSON carries a `vs_prev` object with
   * per-path recall deltas, so quality drift is a diffable number in the
@@ -40,18 +41,7 @@ object RecallAudit {
             case _ => None
           }}.sortBy(_._1).lastOption.map(_._2)
       }).filter(_.isFile)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     try {
       val base = audit(spark, sfDir)
       val json = prevFile match {

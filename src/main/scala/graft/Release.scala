@@ -69,18 +69,7 @@ object Release {
         else operators.Pipelines.CleanMinQuality,
       repairTau = if (args.length > 4) args(4).toDouble
         else operators.Pipelines.RepairTau)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     try {
       val (audit, sheet) = runBuild(spark, args(0), args(1), knobs)
       val stages = audit.collect().sortBy(_.getAs[Int]("stage")).map { r =>

@@ -40,14 +40,7 @@ object ScaleGen {
       // deterministic corpus for graft.CdrWorkload — no base dir needed.
       val out = if (args.length > 0) args(0) else "target/cdr10m"
       val nRec = if (args.length > 1) args(1).toLong else 10000000L
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = Session()
       try generateCdr(spark, out, nRec) finally spark.stop()
       return
     }
@@ -56,15 +49,7 @@ object ScaleGen {
       else if (docs) "target/docs4x" else "target/sf1"
     val n = if (args.length > 2) args(2).toInt else if (docs) 4 else 10
     require(n >= 1, s"replicas must be >= 1: $n")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     try {
       if (docs) generateDocs(spark, base, out, n)
       else generate(spark, base, out, n)

@@ -53,9 +53,6 @@ object ScaleProbe {
     // would start colliding, silently voiding the disjointness argument
     require(scales.forall(s => s >= 1 && s <= 26),
       s"scales must be in [1, 26] (letter-prefix disjointness): $scales")
-    // optional: shuffle partition count — the knob DEPLOY.md says to grow
-    // with the data; pass a larger value to verify that claim at 8×
-    val shufflePartitions = if (args.length > 3) args(3) else "32"
     val queries = Seq("d01_exact_dedup", "d02_ngram_jaccard", "d03_minhash_lsh",
       "d07_dup_clusters", "t13_unigram_surprisal", "t19_bigram_surprisal",
       "t20_line_dedup", "t05_top_tokens", "s01_knn_brute", "s02_ann_lsh",
@@ -106,17 +103,7 @@ object ScaleProbe {
       require(unknown.isEmpty, s"--queries names unprobed cells: $unknown")
     }
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     if (skew) {
       runSkew(spark, baseDir, workDir, scales)

@@ -3,28 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for specs: one JVM-wide SparkSession (local[4], tiny SF). */
+/** Shared session for specs: one JVM-wide [[Session]] (tiny SF). */
 object SparkTestBase {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = Session.builder()
     .appName("graft-test")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-    // shuffled-hash-over-SMJ parity with Bench/Verify (rationale in
-    // Bench.scala) — the plans the specs audit must be the shipped ones
-    .config("spark.sql.join.preferSortMergeJoin",
-      (sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "0") == "1").toString)
     // The 4.x ChecksumCheckpointFileManager deadlocks its async checksum
     // writer pool under rapid transformWithState micro-batches with TTL
     // column families (all executor tasks parked in awaitResult —
     // observed in StreamingSpec); the plain manager has no such pool.
     // Checksums only guard checkpoint corruption — no semantics change.
     .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   val sf = "/root/testdata/sf0.001"
